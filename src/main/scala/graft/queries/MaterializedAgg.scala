@@ -191,10 +191,10 @@ object MaterializedAgg {
       // writer, vacuumed window, duplicate source keys — corruption
       // to refuse, never to commit), and THIS maintain's tombstone
       // count all fall out locally AND the gids in hand feed the
-      // view's upsert/delete below as pre-collected key hints (each
-      // skips its own distinct-collect job — round-9, guide §2 fixed
+      // view's mutation below as a pre-collected key hint (it skips
+      // its own distinct-collect job — round-9, guide §2 fixed
       // costs). An oversized delta falls back to the aggregate-only
-      // job and unhinted mutations.
+      // job and an unhinted mutation.
       val sample = newRows.select(col("gid"), col("n_rows"))
         .limit(TableLog.InFilterMaxKeys + 1).collect()
       val (touched, neg, deadNow, gidHint) =
@@ -238,7 +238,7 @@ object MaterializedAgg {
       // jobs per maintain, and no crash window between stamp and
       // sweep at all). The n_rows=0 residue filter below still covers
       // views holding residue from older maintainers.
-      TableLog.upsert(spark, viewDir, newRows, "gid",
+      TableLog.mutate(spark, viewDir, newRows, "gid", insert = true,
         txn = Some(s"$App#$head"), knownKeys = gidHint,
         dropBatchWhere =
           if (deadNow > 0) Some(col("n_rows") === 0L) else None)

@@ -280,43 +280,30 @@ object TableLog {
     val latest = currentVersion(spark, dir)
     if (latest < 0) return None
     val fs = fsOf(spark, dir)
+    // appId's first stamp in manifests `hi` down to `lo` + 1, reading
+    // no manifest below the one that holds it
+    def newestStamp(hi: Int, lo: Int): Option[Long] =
+      (hi until lo by -1).iterator.flatMap { w =>
+        manifestLines(fs, dir, w).collect {
+          case ("txn", values) => txnStamp(values.head)
+        }.flatten.filter(_._1 == appId).map(_._2)
+      }.nextOption()
     val cp = baseCheckpointFor(fs, dir, latest)
-    val floor = cp.getOrElse(-1)
-    var v = latest
-    while (v > floor) {
-      manifestLines(fs, dir, v).foreach {
-        case ("txn", values) =>
-          val id = values.head
-          val cut = id.lastIndexOf('#')
-          if (cut > 0 && id.substring(0, cut) == appId)
-            return Some(id.substring(cut + 1).toLong)
-        case _ => ()
-      }
-      v -= 1
-    }
-    cp match {
-      case Some(c) =>
-        val st = parseCheckpoint(fs, checkpointPath(dir, c))
-        if (st.isV2) st.txns.get(appId)
-        else {
-          // legacy (format-1) checkpoint: no txn state folded in —
-          // keep scanning the manifests below it, as before
-          var w = c
-          while (w >= 0) {
-            manifestLines(fs, dir, w).foreach {
-              case ("txn", values) =>
-                val id = values.head
-                val cut = id.lastIndexOf('#')
-                if (cut > 0 && id.substring(0, cut) == appId)
-                  return Some(id.substring(cut + 1).toLong)
-              case _ => ()
-            }
-            w -= 1
-          }
-          None
-        }
-      case None => None
-    }
+    newestStamp(latest, cp.getOrElse(-1)).orElse(cp.flatMap { c =>
+      val st = parseCheckpoint(fs, checkpointPath(dir, c))
+      if (st.isV2) st.txns.get(appId)
+      // legacy (format-1) checkpoint: no txn state folded in —
+      // keep scanning the manifests below it, as before
+      else newestStamp(c, -1)
+    })
+  }
+
+  /** (appId, batchId) of a `txn` stamp `appId#batchId`; None when the
+    * stamp has no app part. */
+  private def txnStamp(id: String): Option[(String, Long)] = {
+    val cut = id.lastIndexOf('#')
+    if (cut > 0) Some((id.substring(0, cut), id.substring(cut + 1).toLong))
+    else None
   }
 
   private def manifestLines(fs: FileSystem, dir: String, v: Int)
@@ -348,9 +335,10 @@ object TableLog {
         case Seq("add", rel, lo, hi) =>
           adds += AddEntry(rel, Some((lo.toLong, hi.toLong)))
         case Seq("txn", id) =>
-          val cut = id.lastIndexOf('#')
-          require(cut > 0, s"TableLog: bad checkpoint txn line $id")
-          txns(id.substring(0, cut)) = id.substring(cut + 1).toLong
+          val (app, b) = txnStamp(id).getOrElse(throw
+            new IllegalArgumentException(
+              s"TableLog: bad checkpoint txn line $id"))
+          txns(app) = b
         case other => throw new IllegalArgumentException(
           s"TableLog: bad checkpoint line $other")
       }
@@ -405,13 +393,9 @@ object TableLog {
           case ("remove", Seq(rel)) =>
             require(live.remove(rel).isDefined,
               s"TableLog: v$v removes unknown file $rel")
-          case ("txn", Seq(id)) =>
-            val cut = id.lastIndexOf('#')
-            if (cut > 0) {
-              val app = id.substring(0, cut)
-              val b = id.substring(cut + 1).toLong
-              if (txns.get(app).forall(_ < b)) txns(app) = b
-            }
+          case ("txn", Seq(id)) => txnStamp(id).foreach { case (app, b) =>
+            if (txns.get(app).forall(_ < b)) txns(app) = b
+          }
           case (other, _) =>
             throw new IllegalArgumentException(
               s"TableLog: bad manifest action $other")
@@ -463,14 +447,10 @@ object TableLog {
         case Some((b, false)) =>
           (0 to b).foreach { w =>
             manifestLines(fs, dir, w).foreach {
-              case ("txn", values) =>
-                val id = values.head
-                val cut = id.lastIndexOf('#')
-                if (cut > 0) {
-                  val app = id.substring(0, cut)
-                  val bid = id.substring(cut + 1).toLong
+              case ("txn", values) => txnStamp(values.head).foreach {
+                case (app, bid) =>
                   if (txns.get(app).forall(_ < bid)) txns(app) = bid
-                }
+              }
               case _ => ()
             }
           }
@@ -673,6 +653,90 @@ object TableLog {
   private case class BatchKeys(stats: Array[Long], exactLongs: Boolean,
       strings: Option[Array[String]])
 
+  /** A key set — a mutation batch's keys or a point read's — resolved
+    * against one snapshot of the table: the ONE definition of which
+    * live files can hold a key and of how rows are tested for
+    * membership, shared by MERGE, DELETE and keyed reads, so the read
+    * and write paths can never diverge on which files prune or which
+    * rows match. `candidates`: the live files stage-1 manifest-stats
+    * pruning keeps (all of them when the key is not the table's stats
+    * key). `rebaseKeys`: the sorted stats-space keys, None when stats
+    * can't apply — [[commitRebased]] proves disjointness against
+    * winner add-line stats, which are ALWAYS in the statsKey space, so
+    * a set keyed on any other column (a batch of ts values) must never
+    * "prove" disjointness from doc_id ranges. Membership is the typed
+    * IN filter when `inVals` is defined, else a broadcast join against
+    * the distinct keys `frame`. */
+  private final case class KeySet(key: String, frame: Option[DataFrame],
+      rebaseKeys: Option[Array[Long]], inVals: Option[Seq[Any]],
+      candidates: Seq[String]) {
+    // IN-FILTER fast path: the keys stage 1 already collected for
+    // stats pruning become a typed pushed predicate instead of TWO
+    // broadcast joins (semi for touched files, anti for the rewrite);
+    // oversized batches, non-stats keys and lossily-cast key frames
+    // keep the joins. Join semantics are mirrored exactly: a NULL key
+    // matches nothing (semi: In is null → filtered; anti: kept via
+    // the explicit isNull arm)
+    def matching(df: DataFrame): DataFrame = inVals match {
+      case Some(vs) => df.filter(col(key).isInCollection(vs))
+      case None => df.join(broadcast(frame.get), Seq(key), "left_semi")
+    }
+
+    def notMatching(df: DataFrame): DataFrame = inVals match {
+      case Some(vs) =>
+        df.filter(col(key).isNull || !col(key).isInCollection(vs))
+      case None => df.join(broadcast(frame.get), Seq(key), "left_anti")
+    }
+  }
+
+  /** Run `body` over the [[KeySet]] of `keys`' `key` column against
+    * `liveStats`. The table's key facts (stats key, its kind, the
+    * key's logged type) are read once, here. Stage-1 pruning is
+    * per-KEY precise (a file survives iff some key falls inside its
+    * [lo, hi]; binary search per file over the sorted keys), so a
+    * batch touching the table's two ends doesn't admit everything
+    * between. `persist` caches the distinct keys frame until `body`
+    * returns — a mutation consumes it up to three times (the key
+    * collect, the touch-scan semi-join, the rewrite anti-join), and
+    * without it each action re-shuffles the batch's distinct.
+    * `knownKeys` is [[mutate]]'s pre-collected hint: honored ONLY when
+    * it can drive the pure IN filter (stats-keyed, long-kinded,
+    * integral key column, IN-sized), and then no keys frame is
+    * evaluated at all; any other shape falls back to collecting, so
+    * the hint can never change semantics, only remove a job. */
+  private def withKeySet[T](spark: SparkSession, dir: String, key: String,
+      liveStats: Seq[AddEntry], keys: DataFrame, persist: Boolean,
+      knownKeys: Option[Array[Long]] = None)(body: KeySet => T): T = {
+    // keys enter stats space only when `key` IS the table's stats key,
+    // in the recorded kind
+    val kind = statsKeyLine(spark, dir).collect {
+      case (k, kd) if k == key => kd
+    }
+    val keyType = keyTypeOf(spark, dir, key)
+    val hinted = knownKeys.map { ks0 =>
+        val ks = ks0.distinct
+        java.util.Arrays.sort(ks)
+        BatchKeys(ks, exactLongs = true, strings = None)
+      }.filter(b => b.stats.nonEmpty &&
+        inFilterValues(kind, keyType, b).isDefined)
+    val frame =
+      if (hinted.isDefined) None
+      else {
+        val ks = keys.select(col(key)).distinct()
+        Some(if (persist) ks.persist() else ks)
+      }
+    try {
+      val batch =
+        hinted.orElse(kind.flatMap(sortedBatchKeys(frame.get, key, _)))
+      val candidates =
+        if (kind.isDefined) statsSurvivors(liveStats, batch.map(_.stats))
+        else liveStats
+      body(KeySet(key, frame, batch.map(_.stats),
+        batch.flatMap(inFilterValues(kind, keyType, _)),
+        candidates.map(_.rel)))
+    } finally if (persist) frame.foreach(_.unpersist(blocking = false))
+  }
+
   /** The batch's distinct keys as values of the key column's OWN
     * type — Some only when the membership list provably mirrors the
     * broadcast-join semantics it replaces: long-kinded stats keys
@@ -680,39 +744,32 @@ object TableLog {
     * NARROWING conversion drops keys that do not round-trip (an
     * out-of-range key cannot equal any stored narrow value under the
     * join's widening comparison, so 2^32+5 must match NOTHING — not
-    * row 5); string-kinded stats use the exact collected strings.
-    * Typed values keep the In comparison cast-free, which is what
-    * lets it push to parquet. */
-  private def inFilterValues(spark: SparkSession, dir: String,
-      key: String, batchKeys: Option[BatchKeys],
-      keyType: Option[DataType]): Option[Seq[Any]] =
-    statsKeyKindOf(spark, dir) match {
-      case Some("long") =>
-        batchKeys
-          .filter(b => b.exactLongs && b.stats.length <= InFilterMaxKeys)
-          .flatMap { b =>
-            val ks = b.stats
-            keyType match {
-              case Some(LongType) => Some(ks.toSeq)
-              case Some(IntegerType) => Some(ks.iterator
-                .filter(k => k == k.toInt.toLong)
-                .map(k => k.toInt: Any).toSeq)
-              case Some(ShortType) => Some(ks.iterator
-                .filter(k => k == k.toShort.toLong)
-                .map(k => k.toShort: Any).toSeq)
-              case Some(ByteType) => Some(ks.iterator
-                .filter(k => k == k.toByte.toLong)
-                .map(k => k.toByte: Any).toSeq)
-              case _ => None
-            }
-          }
-      case Some("string") =>
-        // exact-value side channel (round-9): the batch's original
-        // strings, bounded like the long path — the string-keyed
-        // touch-scan stops paying two broadcast builds per mutation
-        if (keyType.contains(org.apache.spark.sql.types.StringType))
-          batchKeys.flatMap(_.strings).map(_.toSeq)
-        else None
+    * row 5); string-kinded stats use the exact collected strings (the
+    * string-keyed touch-scan stops paying two broadcast builds per
+    * mutation). Typed values keep the In comparison cast-free, which
+    * is what lets it push to parquet. */
+  private def inFilterValues(kind: Option[String],
+      keyType: Option[DataType], b: BatchKeys): Option[Seq[Any]] =
+    kind match {
+      case Some("long") if b.exactLongs &&
+          b.stats.length <= InFilterMaxKeys =>
+        val ks = b.stats
+        keyType match {
+          case Some(LongType) => Some(ks.toSeq)
+          case Some(IntegerType) => Some(ks.iterator
+            .filter(k => k == k.toInt.toLong)
+            .map(k => k.toInt: Any).toSeq)
+          case Some(ShortType) => Some(ks.iterator
+            .filter(k => k == k.toShort.toLong)
+            .map(k => k.toShort: Any).toSeq)
+          case Some(ByteType) => Some(ks.iterator
+            .filter(k => k == k.toByte.toLong)
+            .map(k => k.toByte: Any).toSeq)
+          case _ => None
+        }
+      case Some("string")
+          if keyType.contains(org.apache.spark.sql.types.StringType) =>
+        b.strings.map(_.toSeq)
       case _ => None
     }
 
@@ -725,27 +782,6 @@ object TableLog {
     loggedSchema(spark, dir).flatMap(
       _.fields.find(f => normName(f.name) == normName(key)))
       .map(_.dataType)
-
-  /** Stage-1 candidate pruning shared by MERGE, DELETE, and keyed
-    * reads — ONE definition of the rule "keys enter stats space only
-    * when `key` IS the table's stats key, in the recorded kind", so
-    * the read and write paths can never diverge on which files
-    * prune. Returns (sorted stats-space keys — None when stats can't
-    * apply, candidate rels). */
-  private def pruneCandidates(spark: SparkSession, dir: String,
-      keys: DataFrame, key: String, liveStats: Seq[AddEntry])
-      : (Option[BatchKeys], Seq[String]) = {
-    val keyKind: Option[String] =
-      if (statsKeyOf(spark, dir).contains(key))
-        statsKeyKindOf(spark, dir)
-      else None
-    val bk = keyKind.flatMap(kd => sortedBatchKeys(keys, key, kd))
-    val cand =
-      if (keyKind.isDefined)
-        statsSurvivors(liveStats, bk.map(_.stats)).map(_.rel)
-      else liveStats.map(_.rel)
-    (bk, cand)
-  }
 
   /** An EMPTY frame carrying the snapshot's schema. Latest reads
     * trust the logged schema (it remembers evolved columns even when
@@ -773,38 +809,24 @@ object TableLog {
   /** POINT-LOOKUP read: live files whose manifest stats range
     * contains at least one requested key are scanned (per-key binary
     * search — the MERGE touch-scan's stage 1, on the read path), the
-    * residual semi-join keeps exactly the requested keys. With `key`
-    * = the table's statsKey this touches only intersecting files; any
+    * residual membership test keeps exactly the requested keys. With
+    * `key` = the table's statsKey this touches only intersecting
+    * files, and building the frame runs the one key-collect job; any
     * other key degrades to a full scan + semi-join (correct, just
     * unpruned). `keys` re-evaluates at execution — pass a cheap
     * frame. */
   def readVersionKeys(spark: SparkSession, dir: String,
       keys: DataFrame, key: String,
-      version: Option[Int] = None): DataFrame = {
-    val liveStats = liveFileStats(spark, dir, version)
-    val statsKeyed = statsKeyOf(spark, dir).contains(key)
-    val ks0 = keys.select(col(key)).distinct()
-    // the persist serves the stats-space collect; without it the
-    // only consumer is the final semi-join, which re-evaluates fine
-    val ks = if (statsKeyed) ks0.persist() else ks0
-    try {
-      // an empty key set reads EMPTY (with the schema), never a
-      // full-table scan against an empty broadcast
-      if (ks.limit(1).isEmpty) return emptySnapshot(spark, dir, version)
-      val (sks, cand) = pruneCandidates(spark, dir, ks, key, liveStats)
-      if (cand.isEmpty) emptySnapshot(spark, dir, version)
-      else inFilterValues(spark, dir, key, sks,
-          keyTypeOf(spark, dir, key)) match {
-        // same IN-filter fast path as the write-side touch-scans:
-        // the residual membership test pushes into the pruned scan
-        // instead of building a broadcast join
-        case Some(vs) => readLive(spark, dir, cand)
-          .filter(col(key).isInCollection(vs))
-        case None => readLive(spark, dir, cand)
-          .join(broadcast(ks), Seq(key), "left_semi")
-      }
-    } finally if (statsKeyed) ks.unpersist(blocking = false)
-  }
+      version: Option[Int] = None): DataFrame =
+    // no persist: the key collect is the keys frame's only consumer
+    // while building; the returned semi-join re-evaluates it fine
+    withKeySet(spark, dir, key, liveFileStats(spark, dir, version), keys,
+        persist = false) { ks =>
+      // an empty stats-key set has no candidates: it reads EMPTY (with
+      // the schema), never a full-table scan
+      if (ks.candidates.isEmpty) emptySnapshot(spark, dir, version)
+      else ks.matching(readLive(spark, dir, ks.candidates))
+    }
 
   private def rangeRead(spark: SparkSession, dir: String, encLo: Long,
       encHi: Long, residual: org.apache.spark.sql.Column,
@@ -1521,9 +1543,7 @@ object TableLog {
               case ("add", vs) if keyed =>
                 val overlap = (batchKeys, vs) match {
                   case (Some(ks), Seq(_, lo, hi)) =>
-                    val i = java.util.Arrays.binarySearch(ks, lo.toLong)
-                    val at = if (i >= 0) i else -i - 1
-                    at < ks.length && ks(at) <= hi.toLong
+                    holdsKeyIn(ks, lo.toLong, hi.toLong)
                   case _ => true // no stats either side: not provable
                 }
                 require(!overlap,
@@ -1547,29 +1567,148 @@ object TableLog {
     * key, files whose recorded [keyLo, keyHi] misses the batch's key
     * range are skipped without even being OPENED (the lakehouse
     * skipping decision, from the log); (2) the surviving candidates
-    * get one column-pruned semi-join scan. A commit race rebases
+    * get one column-pruned membership scan. A commit race rebases
     * optimistically (see [[commitRebased]]) up to `maxRebases` times
     * before aborting. */
   def upsert(spark: SparkSession, dir: String, batch: DataFrame,
       key: String, allowSchemaEvolution: Boolean = false,
-      maxRebases: Int = 2, txn: Option[String] = None,
-      knownKeys: Option[Array[Long]] = None,
-      dropBatchWhere: Option[org.apache.spark.sql.Column] = None)
-      : Unit = {
+      maxRebases: Int = 2, txn: Option[String] = None): Unit =
+    mutate(spark, dir, batch, key, insert = true, allowSchemaEvolution,
+      maxRebases, txn)
+
+  /** MERGE's delete arm: rows whose `key` appears in `keys` are
+    * REMOVED from the table (decontamination hits, takedowns). Same
+    * COW shape as [[upsert]]: the stats-pruned touch-scan finds the
+    * files that contain a doomed key, ONLY those are rewritten
+    * (without the doomed keys), untouched files carry by reference,
+    * and prior versions still read the deleted rows — time travel —
+    * until vacuumed. A key set no live row holds commits nothing. */
+  def delete(spark: SparkSession, dir: String, keysDf: DataFrame,
+      key: String, maxRebases: Int = 2,
+      txn: Option[String] = None): Unit =
+    mutate(spark, dir, keysDf, key, insert = false,
+      maxRebases = maxRebases, txn = txn)
+
+  /** The keyed copy-on-write rewrite behind [[upsert]] (`insert`:
+    * `batch` rows land) and [[delete]] (no rows land; `batch` only
+    * carries the keys): the live rows holding a batch key leave the
+    * touched files' rewrite, all in ONE commit.
+    *
+    * `knownKeys` — a PRE-COLLECTED KEY HINT: a caller that already
+    * holds this batch's distinct non-null key values
+    * ([[MaterializedAgg]] collects its delta frame for the divergence
+    * pre-check anyway) skips the mutation's own key-collect job. The
+    * hint must hold EVERY non-null batch key: a key missing from it
+    * leaves its resident rows in place beside the inserted ones
+    * (duplicate keys), which is why it is not public API.
+    *
+    * `dropBatchWhere` — the MERGE-WITH-DELETE arm: a batch row
+    * matching it marks its key for REMOVAL — the key still drives the
+    * touch-scan and the rewrite (resident rows with that key leave),
+    * but no replacement row lands. MaterializedAgg's tombstone sweep
+    * rides this instead of a commit-then-sweep version pair. */
+  private[queries] def mutate(spark: SparkSession, dir: String,
+      batch: DataFrame, key: String, insert: Boolean,
+      allowSchemaEvolution: Boolean = false, maxRebases: Int = 2,
+      txn: Option[String] = None, knownKeys: Option[Array[Long]] = None,
+      dropBatchWhere: Option[org.apache.spark.sql.Column] = None): Unit = {
     val v = currentVersion(spark, dir) + 1
     require(v >= 1, s"TableLog: no base version in $dir")
     val liveStats = liveFileStats(spark, dir)
     val fs = fsOf(spark, dir)
-    // SCHEMA CONTRACT, checked BEFORE anything writes: shared columns
-    // must agree on type (a conflicting batch would otherwise commit
-    // files the read side can never schema-merge — a write the reads
-    // can't read), and without the explicit evolution opt-in the
-    // batch's column set must equal the table's (a typo'd column
-    // name must fail loudly, not silently null a replaced row's
-    // real column and invent a junk one). Names compare CASE-
-    // INSENSITIVELY, matching Spark's default resolution — a
-    // case-variant column is the same column, not a new one. The
-    // schema comes from the live set in hand (no second log replay).
+    val evolvedSchema =
+      if (insert) mergeSchema(spark, dir, batch, liveStats,
+        allowSchemaEvolution)
+      else None
+    withKeySet(spark, dir, key, liveStats, batch, persist = true,
+        knownKeys) { ks =>
+      // dir-relative path by the scan's own URI rendering (the
+      // compactFiles file-name-encoding lesson)
+      val uriOf = ks.candidates.map { rel =>
+        fs.makeQualified(new Path(s"$dir/$rel")).toUri.toString -> rel
+      }.toMap
+      // stage 2: the column-pruned touch-scan over the candidates only.
+      // readLive, NOT a plain read: on an evolved table whose merge key
+      // arrived BY evolution, single-footer inference may pick a file
+      // lacking the key column — an AnalysisException on one run,
+      // a silently empty semi-join on another (review-caught)
+      val touched: Seq[String] =
+        if (ks.candidates.isEmpty) Seq.empty
+        else ks.matching(readLive(spark, dir, ks.candidates)
+            .withColumn("_graft_file", input_file_name()))
+          .select(col("_graft_file")).distinct()
+          .collect().map(_.getString(0)).toSeq
+          .map(u => uriOf.getOrElse(u,
+            throw new IllegalStateException(
+              s"TableLog: scan file $u not in the live set")))
+      // a DELETE whose keys no live row holds commits nothing
+      if (insert || touched.nonEmpty) {
+        val rows = dropBatchWhere match {
+          case Some(p) => batch.filter(!coalesce(p, lit(false)))
+          case None => batch
+        }
+        // allowMissingColumns only under the evolution opt-in: a batch
+        // may then carry NEW columns (old rows null-fill them) or omit
+        // existing ones (replaced rows null-fill — REPLACE semantics);
+        // strict mode already proved the column sets equal
+        val rewritten =
+          if (touched.isEmpty) rows
+          else {
+            val kept = ks.notMatching(readLive(spark, dir, touched))
+            if (insert) kept.unionByName(rows,
+              allowMissingColumns = allowSchemaEvolution)
+            else kept
+          }
+        // CHECK constraints gate what gets WRITTEN — rewritten rows
+        // include evolution's null-fills, so a constraint on an omitted
+        // column correctly refuses the write (NULL evaluations violate:
+        // strict mode, the data-quality reading). A delete only
+        // re-writes rows that already passed. The frame persists
+        // across the validation collect and the data write, or the
+        // touched-file read + anti-join would run twice.
+        val cs = if (insert) constraintsOf(spark, dir) else Nil
+        val toWrite = if (cs.nonEmpty) rewritten.persist() else rewritten
+        try {
+          validateConstraints(spark, toWrite, cs, dir, "MERGE")
+          // the evolution marker is written AFTER constraint validation
+          // (a REFUSED write must not flag a never-evolved table into
+          // paying merge reads forever) but BEFORE the commit (a crash
+          // in between leaves a non-evolved table paying harmless merge
+          // reads, never an evolved table read without merging)
+          if (evolvedSchema.isDefined)
+            require(writeSmallFileAtomic(fs,
+              new Path(logDir(dir), "_evolved"), "1", overwrite = true),
+              "TableLog: failed to mark schema evolution")
+          commitRebased(spark, dir, v,
+            writeData(spark, sizeForWrite(spark, toWrite), dir, v),
+            touched, keyed = true, ks.rebaseKeys, txn, maxRebases)
+          // widen the logged schema to the union AFTER the commit landed
+          // — the remembered shape must track every evolution, but an
+          // ABORTED upsert must never persist phantom columns that no
+          // committed file carries (a crash between commit and widen
+          // only loses the reminder; the files themselves still
+          // merge-read with the true schema, and the next evolving
+          // upsert re-records it)
+          evolvedSchema.foreach(writeLoggedSchema(fs, dir, _))
+        } finally if (cs.nonEmpty) toWrite.unpersist(blocking = false)
+      }
+    }
+  }
+
+  /** MERGE's SCHEMA CONTRACT, checked BEFORE anything writes: shared
+    * columns must agree on type (a conflicting batch would otherwise
+    * commit files the read side can never schema-merge — a write the
+    * reads can't read), and without the explicit evolution opt-in the
+    * batch's column set must equal the table's (a typo'd column name
+    * must fail loudly, not silently null a replaced row's real column
+    * and invent a junk one). Names compare CASE-INSENSITIVELY,
+    * matching Spark's default resolution — a case-variant column is
+    * the same column, not a new one. The schema comes from the live
+    * set in hand (no second log replay). Returns the widened schema
+    * to log when the batch evolves the table. */
+  private def mergeSchema(spark: SparkSession, dir: String,
+      batch: DataFrame, liveStats: Seq[AddEntry],
+      allowSchemaEvolution: Boolean): Option[StructType] = {
     def norm(s: String) = normName(s)
     // a fully-deleted table still REMEMBERS its schema in the log —
     // a re-population batch honors the same contract as any other
@@ -1623,221 +1762,11 @@ object TableLog {
     // table evolved: an insert-only batch that omits a column
     // commits narrow-schema files into a wide live set, and an
     // unmerged read of that mix would silently drop the wide
-    // columns. The marker is written AFTER constraint validation (a
-    // REFUSED write must not flag a never-evolved table into paying
-    // merge reads forever) but BEFORE the commit (a crash in between
-    // leaves a non-evolved table paying harmless merge reads, never
-    // an evolved table read without merging).
-    val marksEvolution = allowSchemaEvolution && batchCols != tableCols
-    // PRE-COLLECTED KEY HINT (round-9): a caller that already holds
-    // this batch's distinct non-null key values — MaterializedAgg
-    // collects its delta frame for the divergence pre-check anyway —
-    // passes them here and the mutation skips its own key-collect
-    // job. Honored ONLY when the hint can drive the pure IN-filter
-    // path below (stats-keyed, long-kinded, integral key column,
-    // IN-sized); any other shape falls back to collecting, so the
-    // hint can never change semantics, only remove a job.
-    val hinted: Option[BatchKeys] = knownKeys.map { ks0 =>
-        val ks = ks0.distinct
-        java.util.Arrays.sort(ks)
-        BatchKeys(ks, exactLongs = true, strings = None)
-      }.filter(b => b.stats.nonEmpty &&
-        b.stats.length <= InFilterMaxKeys &&
-        statsKeyOf(spark, dir).contains(key) &&
-        statsKeyKindOf(spark, dir).contains("long") &&
-        inFilterValues(spark, dir, key, Some(b),
-          keyTypeOf(spark, dir, key)).isDefined)
-    // persisted: consumed by up to three actions (sortedBatchKeys
-    // collect, the touch-scan semi-join, the rewrite anti-join) —
-    // without it each action re-shuffles the batch's distinct.
-    // Skipped entirely under an honored hint (the IN path never
-    // evaluates a keys frame).
-    val keys: Option[DataFrame] =
-      if (hinted.isDefined) None
-      else Some(batch.select(col(key)).distinct().persist())
-    try {
-    // stage 1: manifest-stats pruning — per-KEY precision (a file
-    // survives iff some batch key falls inside its [lo, hi]; binary
-    // search per file over the sorted batch keys), so a batch
-    // touching the table's two ends doesn't admit everything between
-    val (sortedKeys, candidates) = hinted match {
-      case Some(b) =>
-        (Some(b), statsSurvivors(liveStats, Some(b.stats)).map(_.rel))
-      case None => pruneCandidates(spark, dir, keys.get, key, liveStats)
-    }
-    // IN-FILTER fast path: stage 1 already collected this batch's
-    // keys for stats pruning — membership against the candidate rows
-    // reuses them as a typed pushed predicate instead of building
-    // TWO broadcast joins (semi for touched files, anti for the
-    // rewrite). Join semantics are mirrored exactly: a NULL key
-    // matches nothing (semi: In is null → filtered; anti: kept via
-    // the explicit isNull arm). Falls back to the joins for
-    // oversized batches, non-stats keys, and lossily-cast key
-    // frames; string stats kinds ride the exact collected strings.
-    val inVals = inFilterValues(spark, dir, key, sortedKeys,
-      keyTypeOf(spark, dir, key))
-    // dir-relative path by the scan's own URI rendering (the
-    // compactFiles file-name-encoding lesson)
-    val uriOf = candidates.map { rel =>
-      fs.makeQualified(new Path(s"$dir/$rel")).toUri.toString -> rel
-    }.toMap
-    // stage 2: the column-pruned touch-scan over the candidates only.
-    // readLive, NOT a plain read: on an evolved table whose merge key
-    // arrived BY evolution, single-footer inference may pick a file
-    // lacking the key column — an AnalysisException on one run,
-    // a silently empty semi-join on another (review-caught)
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else {
-        val scanned = readLive(spark, dir, candidates)
-          .withColumn("_graft_file", input_file_name())
-        (inVals match {
-          case Some(vs) => scanned.filter(col(key).isInCollection(vs))
-          case None => scanned.join(broadcast(keys.get), Seq(key),
-            "left_semi")
-        })
-          .select(col("_graft_file")).distinct()
-          .collect().map(_.getString(0)).toSeq
-          .map(u => uriOf.getOrElse(u,
-            throw new IllegalStateException(
-              s"TableLog: scan file $u not in the live set")))
-      }
-    // allowMissingColumns only under the evolution opt-in: a batch
-    // may then carry NEW columns (old rows null-fill them) or omit
-    // existing ones (replaced rows null-fill — REPLACE semantics);
-    // strict mode already proved the column sets equal above
-    // MERGE-WITH-DELETE arm (round-9): a batch row matching
-    // `dropBatchWhere` marks its key for REMOVAL — the key still
-    // drives the touch-scan and the anti filter above (resident rows
-    // with that key leave the rewrite), but no replacement row lands,
-    // all inside the ONE stamped commit. MaterializedAgg's tombstone
-    // sweep rides this instead of a commit-then-sweep version pair.
-    val batchRows = dropBatchWhere match {
-      case Some(p) => batch.filter(!coalesce(p, lit(false)))
-      case None => batch
-    }
-    val rewritten =
-      if (touched.isEmpty) batchRows
-      else {
-        val live = readLive(spark, dir, touched)
-        (inVals match {
-          case Some(vs) => live.filter(col(key).isNull ||
-            !col(key).isInCollection(vs))
-          case None => live.join(broadcast(keys.get), Seq(key),
-            "left_anti")
-        }).unionByName(batchRows,
-          allowMissingColumns = allowSchemaEvolution)
-      }
-    // CHECK constraints gate what gets WRITTEN — rewritten rows
-    // include evolution's null-fills, so a constraint on an omitted
-    // column correctly refuses the write (NULL evaluations violate:
-    // strict mode, the data-quality reading). The frame persists
-    // across the validation collect and the data write, or the
-    // touched-file read + anti-join would run twice.
-    val cs = constraintsOf(spark, dir)
-    val toWrite = if (cs.nonEmpty) rewritten.persist() else rewritten
-    try {
-      validateConstraints(spark, toWrite, cs, dir, "MERGE")
-      if (marksEvolution)
-        require(writeSmallFileAtomic(fs,
-          new Path(logDir(dir), "_evolved"), "1", overwrite = true),
-          "TableLog: failed to mark schema evolution")
-      // rebase disjointness is proved against winner add-line stats,
-      // which are ALWAYS in the table's statsKey space — sortedKeys
-      // is already None for a merge keyed on any other column (a
-      // batch of ts values must never "prove" disjointness from
-      // doc_id ranges)
-      val rebaseKeys = sortedKeys.map(_.stats)
-      commitRebased(spark, dir, v,
-        writeData(spark, sizeForWrite(spark, toWrite), dir, v),
-        touched, keyed = true, rebaseKeys, txn, maxRebases)
-      // widen the logged schema to the union AFTER the commit landed
-      // — the remembered shape must track every evolution, but an
-      // ABORTED upsert must never persist phantom columns that no
-      // committed file carries (a crash between commit and widen
-      // only loses the reminder; the files themselves still
-      // merge-read with the true schema, and the next evolving
-      // upsert re-records it)
-      if (marksEvolution)
-        writeLoggedSchema(fs, dir, StructType(tableSchema.fields ++
-          batch.schema.fields.filterNot(f =>
-            tableCols.contains(norm(f.name)))))
-    } finally if (cs.nonEmpty) toWrite.unpersist(blocking = false)
-    } finally keys.foreach(_.unpersist(blocking = false))
-  }
-
-  /** MERGE's delete arm: rows whose `key` appears in `keys` are
-    * REMOVED from the table (decontamination hits, takedowns). Same
-    * COW shape as [[upsert]]: the stats-pruned touch-scan finds the
-    * files that contain a doomed key, ONLY those are rewritten
-    * (anti-joined against the keys), untouched files carry by
-    * reference, and prior versions still read the deleted rows —
-    * time travel — until vacuumed. */
-  def delete(spark: SparkSession, dir: String, keysDf: DataFrame,
-      key: String, maxRebases: Int = 2,
-      txn: Option[String] = None,
-      knownKeys: Option[Array[Long]] = None): Unit = {
-    val v = currentVersion(spark, dir) + 1
-    require(v >= 1, s"TableLog: no base version in $dir")
-    val liveStats = liveFileStats(spark, dir)
-    val fs = fsOf(spark, dir)
-    // same pre-collected hint contract as upsert (see there)
-    val hinted: Option[BatchKeys] = knownKeys.map { ks0 =>
-        val ks = ks0.distinct
-        java.util.Arrays.sort(ks)
-        BatchKeys(ks, exactLongs = true, strings = None)
-      }.filter(b => b.stats.nonEmpty &&
-        b.stats.length <= InFilterMaxKeys &&
-        statsKeyOf(spark, dir).contains(key) &&
-        statsKeyKindOf(spark, dir).contains("long") &&
-        inFilterValues(spark, dir, key, Some(b),
-          keyTypeOf(spark, dir, key)).isDefined)
-    val keys: Option[DataFrame] =
-      if (hinted.isDefined) None
-      else Some(keysDf.select(col(key)).distinct().persist())
-    try {
-    val (sortedKeys, candidates) = hinted match {
-      case Some(b) =>
-        (Some(b), statsSurvivors(liveStats, Some(b.stats)).map(_.rel))
-      case None => pruneCandidates(spark, dir, keys.get, key, liveStats)
-    }
-    // same IN-filter fast path as upsert (see there for semantics)
-    val inVals = inFilterValues(spark, dir, key, sortedKeys,
-      keyTypeOf(spark, dir, key))
-    val uriOf = candidates.map { rel =>
-      fs.makeQualified(new Path(s"$dir/$rel")).toUri.toString -> rel
-    }.toMap
-    val touched: Seq[String] =
-      if (candidates.isEmpty) Seq.empty
-      else {
-        val scanned = readLive(spark, dir, candidates)
-          .withColumn("_graft_file", input_file_name())
-        (inVals match {
-          case Some(vs) => scanned.filter(col(key).isInCollection(vs))
-          case None => scanned.join(broadcast(keys.get), Seq(key),
-            "left_semi")
-        })
-          .select(col("_graft_file")).distinct()
-          .collect().map(_.getString(0)).toSeq
-          .map(u => uriOf.getOrElse(u,
-            throw new IllegalStateException(
-              s"TableLog: scan file $u not in the live set")))
-      }
-    if (touched.isEmpty) return // nothing contains a doomed key
-    val liveTouched = readLive(spark, dir, touched)
-    val survivors = inVals match {
-      case Some(vs) => liveTouched.filter(col(key).isNull ||
-        !col(key).isInCollection(vs))
-      case None => liveTouched.join(broadcast(keys.get), Seq(key),
-        "left_anti")
-    }
-    // same key-space rule as upsert: stats-key merges may prove
-    // disjointness, any other key stays conservative (None already)
-    val rebaseKeys = sortedKeys.map(_.stats)
-    commitRebased(spark, dir, v,
-      writeData(spark, sizeForWrite(spark, survivors), dir, v),
-      touched, keyed = true, rebaseKeys, txn, maxRebases)
-    } finally keys.foreach(_.unpersist(blocking = false))
+    // columns.
+    if (allowSchemaEvolution && batchCols != tableCols)
+      Some(StructType(tableSchema.fields ++ batch.schema.fields.filterNot(
+        f => tableCols.contains(norm(f.name)))))
+    else None
   }
 
   /** MERGE batches are bounded (they broadcast in the touch-scan);
@@ -1848,10 +1777,12 @@ object TableLog {
 
   /** The batch's distinct keys in STATS SPACE (key values for
     * integral keys, prefix encodings for string keys) as a sorted
-    * long array, or None when stats can't apply (non-castable key,
-    * all-null, oversized). try_cast, not cast: a key that doesn't
-    * fit the kind must degrade to the conservative None, not throw
-    * under ANSI mode. */
+    * long array, or None when stats can't apply (oversized). A key set
+    * with no non-null key (all-null, empty, or nothing castable)
+    * collects to an EMPTY array — it can match no row, so it prunes
+    * every file instead of admitting every file. try_cast, not cast:
+    * a key that doesn't fit the kind must drop out, not throw under
+    * ANSI mode. */
   private def sortedBatchKeys(keys: DataFrame, key: String,
       kind: String): Option[BatchKeys] = {
     val keyDt = keys.schema.fields
@@ -1861,7 +1792,7 @@ object TableLog {
         .filter(col("k").isNotNull)
         .limit(MaxStatsKeys + 1)
         .collect().map(_.getString(0))
-      if (vals.isEmpty || vals.length > MaxStatsKeys) None
+      if (vals.length > MaxStatsKeys) None
       else {
         val ks = vals.map(encodeStringKey)
         java.util.Arrays.sort(ks)
@@ -1880,7 +1811,7 @@ object TableLog {
         .filter(col("k").isNotNull)
         .limit(MaxStatsKeys + 1)
         .collect().map(_.getLong(0))
-      if (ks.isEmpty || ks.length > MaxStatsKeys) None
+      if (ks.length > MaxStatsKeys) None
       else {
         java.util.Arrays.sort(ks)
         Some(BatchKeys(ks, exactLongs = keyDt.exists(isIntegralType),
@@ -1890,31 +1821,33 @@ object TableLog {
   }
 
   /** Files whose [lo, hi] contains at least one batch key (binary
-    * search per file); no-stats files and a no-keys batch are
-    * conservatively included. */
+    * search per file); no-stats files are conservatively included
+    * unless the key set is empty, and keys that can't be collected
+    * (None) admit every file. */
   private def statsSurvivors(liveStats: Seq[AddEntry],
       sortedKeys: Option[Array[Long]]): Seq[AddEntry] =
     sortedKeys match {
       case None => liveStats
       case Some(ks) => liveStats.filter {
-        case AddEntry(_, None) => true
-        case AddEntry(_, Some((lo, hi))) =>
-          val i = java.util.Arrays.binarySearch(ks, lo)
-          val at = if (i >= 0) i else -i - 1 // first key >= lo
-          at < ks.length && ks(at) <= hi
+        case AddEntry(_, None) => ks.nonEmpty
+        case AddEntry(_, Some((lo, hi))) => holdsKeyIn(ks, lo, hi)
       }
     }
 
+  /** Does sorted `ks` hold a key in [lo, hi]? (binary search) */
+  private def holdsKeyIn(ks: Array[Long], lo: Long, hi: Long): Boolean = {
+    val i = java.util.Arrays.binarySearch(ks, lo)
+    val at = if (i >= 0) i else -i - 1 // first key >= lo
+    at < ks.length && ks(at) <= hi
+  }
+
   /** The candidate count [[upsert]]'s manifest-stats stage would scan
-    * for this batch — exposed so specs and probes can pin the
+    * for this batch — exposed so specs and catalog queries can pin the
     * skipping invariant without instrumenting the write path. */
   def statsCandidates(spark: SparkSession, dir: String,
       batch: DataFrame, key: String): Int =
-    if (!statsKeyOf(spark, dir).contains(key))
-      liveFileStats(spark, dir).size
-    else statsSurvivors(liveFileStats(spark, dir),
-      sortedBatchKeys(batch.select(col(key)).distinct(), key,
-        statsKeyKindOf(spark, dir).getOrElse("long")).map(_.stats)).size
+    withKeySet(spark, dir, key, liveFileStats(spark, dir), batch,
+      persist = false)(_.candidates.size)
 
   /** OPTIMIZE: rewrite the live files into target-sized bins (the
     * q_compact_plan cumulative rule, ONE distributed job — same shape

@@ -118,7 +118,7 @@ object TimeSeries {
     * medallion pipeline). Key = (user_id, event_type); latest =
     * max (ts, event_id) with the unique event_id as tiebreak.
     *
-    * Plan choice — MEASURED, not assumed (CompactProbe, 100M events
+    * Plan choice — MEASURED, not assumed (NOTES.md, 100M events
     * / 3.4M keys, checksum-verified equal outputs): the "obvious"
     * shuffle-sparing alternative, keep-latest via an order-
     * independent `max(struct(ts, event_id, value))` aggregate,
@@ -130,9 +130,9 @@ object TimeSeries {
     * streaming pass over the sort the shuffle already pays. The
     * aggregate's only remaining regime is a network-bound cluster
     * shuffle of co-located wide rows (its partial step collapses
-    * each split to one row per key before the wire); CompactProbe
-    * keeps both plans runnable and asserts their election-checksum
-    * equality, which is the cross-plan proof. */
+    * each split to one row per key before the wire). The
+    * measurement asserted both plans' election checksums equal,
+    * which is the cross-plan proof. */
   def eventsCompact(spark: SparkSession, dir: String): DataFrame = {
     // cross-engine ordering convention (the eventsAsofAttribution
     // rule): Spark's ts is a nano long while DuckDB may coerce
@@ -562,7 +562,7 @@ object TimeSeries {
     * rolling aggregate is bit-exact on both engines regardless of
     * float summation order.
     *
-    * ONE exchange serves both steps — MEASURED (RollProbe, 100M
+    * ONE exchange serves both steps — MEASURED (NOTES.md, 100M
     * events, checksum-equal plans): hash(user_id) satisfies the
     * (user_id, day) grouping's clustered-distribution requirement
     * AND the window's partitionBy(user_id), so an explicit
